@@ -3386,6 +3386,7 @@ class Engine:
                 read_table_evolved,
                 strip_collations,
                 table_checks,
+                table_row_count,
                 validate_checks,
             )
 
@@ -3447,7 +3448,7 @@ class Engine:
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
             self._refresh(parsed.table)
-            return self.spark.read.parquet(path).count()
+            return table_row_count(path)
 
         info = self._writable(parsed.table)
         path = info["path"]
@@ -3628,20 +3629,22 @@ class Engine:
             else:
                 from mariadb_columnstore_engine_spark.sources.ingest import (  # noqa: E501
                     strip_collations,
+                    table_row_count,
                 )
 
                 strip_collations(out).write.mode("append").parquet(path)
-                n = self.spark.read.parquet(path).count()
+                n = table_row_count(path)
             if ai:
                 # counter = table max + 1 (covers both assigned and
-                # explicit values; parquet footer stats make the max a
-                # metadata-only scan)
+                # explicit values); the raw read stores the schema the
+                # _refresh below then reuses
                 from mariadb_columnstore_engine_spark.sources.ingest import (  # noqa: E501
+                    _read_parquet_memo,
                     _write_evolution,
                 )
 
                 mx = (
-                    self.spark.read.parquet(path)
+                    _read_parquet_memo(self.spark, path)
                     .agg(F.max(ai["column"]))
                     .first()[0]
                 )

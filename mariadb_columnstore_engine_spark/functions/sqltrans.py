@@ -1974,10 +1974,13 @@ def translate_statement(
         # shadowing guard: any `AS <name>` alias target in the statement
         # may redefine <name> with non-catalog semantics — drop those
         # names from the fast-path set (conservative: table aliases and
-        # unrelated column aliases only disable an optimization)
+        # unrelated column aliases only disable an optimization). A
+        # quoted alias (AS `x`) is a mask placeholder: resolve it
         shadowed = {
-            m.group(1).lower()
-            for m in re.finditer(r"\bAS\s+`?(\w+)`?", masked, re.IGNORECASE)
+            (m.group(1) or store[int(m.group(2))].strip("`")).lower()
+            for m in re.finditer(
+                r"\bAS\s+(?:(\w+)|\x00(\d+)\x00)", masked, re.IGNORECASE
+            )
         }
         if shadowed & numeric_columns:
             numeric_columns = numeric_columns - frozenset(shadowed)

@@ -14,6 +14,13 @@ Scale notes: the rewrite is a full scan + write of affected data only if
 you partition wisely — pass ``partition_filter`` to rewrite only the
 hive partitions that can contain matches (partition pruning bounds the
 copy-on-write cost exactly like the reference's extent-targeted DML).
+
+Every statement returns the row count of the rewritten table, read from
+the new files' parquet footers (``ingest.table_row_count``) the way the
+reference reads counts from the extent map — never by rescanning the
+written data. The rewrite's own read reuses the session's memoized
+table schema (``ingest.read_table_evolved``), so the rewrite runs no
+Spark job besides the write itself.
 """
 
 from __future__ import annotations
@@ -43,6 +50,10 @@ def _rewrite(spark: SparkSession, path: str,
              alias: str | None = None) -> int:
     """Common copy-on-write machinery; returns the new row count.
 
+    The count is the rows written to the new directory — the visible
+    rows, before disabled partitions are carried over — summed from the
+    written files' footers (``table_row_count``), no Spark job.
+
     Reads through the schema-evolution sidecar (read_table_evolved), so
     transforms see the LOGICAL schema — instant-ALTER-added and generated
     columns included — and the rewrite materializes that debt into the
@@ -57,6 +68,7 @@ def _rewrite(spark: SparkSession, path: str,
         _evolution,
         _write_evolution,
         read_table_evolved,
+        table_row_count,
     )
 
     evo = _evolution(path)
@@ -99,7 +111,7 @@ def _rewrite(spark: SparkSession, path: str,
 
     out = strip_collations(out)
     out.write.parquet(tmp)
-    n = spark.read.parquet(tmp).count()  # visible rows (pre-carry)
+    n = table_row_count(tmp)  # visible rows (pre-carry)
     # disabled partitions are invisible to queries AND to DML (the
     # reference blocks DML/import on them) — read_table_evolved excluded
     # their files above, so carry them through the swap byte-wise or the

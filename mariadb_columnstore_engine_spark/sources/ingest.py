@@ -463,41 +463,138 @@ def _live_data_files(path: str, disabled: set[str]) -> list[str]:
     return files
 
 
-def read_table_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """Read a table through its evolution sidecar: mergeSchema unions
-    old and new file schemas, added columns get their declared default
-    where files predate them, dropped columns are projected away.
-    Disabled partitions (caldisablepartitions analogue) are excluded at
-    the FILE level — their extents are never opened, exactly the
-    reference's extent-elimination of disabled partitions."""
-    import pyspark.sql.functions as F
+def _spark_hidden(name: str) -> bool:
+    """Spark's file-index rule for path names it never reads as data
+    (InMemoryFileIndex.shouldFilterOutPathName, isDataPath): names
+    starting with ``_`` or ``.`` except ``_k=v`` partition directories,
+    and in-flight ``._COPYING_`` copies."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
 
-    evo = _evolution(path)
-    disabled = set(evo.get("disabled_partitions", []))
-    if disabled:
-        live = _live_data_files(path, disabled)
+
+def table_row_count(path: str) -> int:
+    """Row count of the parquet table at ``path`` from its file footers
+    — what ``spark.read.parquet(path).count()`` returns, without a
+    schema-inference job and a two-stage count (the reference reads row
+    counts from the BRM extent map, never from the column data). Sums
+    the files Spark's file index would list, disabled partitions
+    included; zero-length files hold no rows (Spark splits them into
+    nothing)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    n = 0
+    for root, dirs, fnames in os.walk(path):
+        dirs[:] = [d for d in dirs if not _spark_hidden(d)]
+        for fn in fnames:
+            f = os.path.join(root, fn)
+            if not _spark_hidden(fn) and os.path.getsize(f) > 0:
+                n += pq.read_metadata(f).num_rows
+    return n
+
+
+# Session confs ParquetToSparkSchemaConverter and partition discovery
+# read while inferring a schema: a different value may infer a
+# different schema from the same files, so they key the schema memo
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+
+def _file_listing(path: str) -> tuple:
+    """``(relpath, size, mtime_ns)`` of every regular file under
+    ``path``, hidden ones included."""
+    import os
+
+    out = []
+    for root, _dirs, fnames in os.walk(path):
+        for fn in fnames:
+            f = os.path.join(root, fn)
+            st = os.stat(f)
+            out.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _read_parquet_memo(spark: SparkSession, path: str,
+                       files: list[str] | None = None) -> DataFrame:
+    """The table's raw mergeSchema parquet read — the whole directory,
+    or the explicit ``files`` under ``basePath=path`` — with the
+    inferred schema memoized on the session (the system catalog's
+    cached table schema, CalpontSystemCatalog, instead of a Spark
+    inference job per read). One entry per table path; see
+    ``read_table_evolved`` for the key and the miss rule."""
+    if files is None:
+        reader = (
+            spark.read.option("mergeSchema", "true")
+            .option("recursiveFileLookup", "false")
+        )
+        paths, base = (path,), None
+    else:
         reader = (
             spark.read.option("mergeSchema", "true")
             # basePath keeps hive partition-directory columns resolvable
             # when reading an explicit file list
             .option("basePath", path)
         )
-        if live:
-            df = reader.parquet(*live)
-        else:
-            # every partition disabled: empty relation, full schema
-            df = (
-                spark.read.option("mergeSchema", "true")
-                .option("recursiveFileLookup", "false")
-                .parquet(path)
-                .limit(0)
-            )
+        paths, base = tuple(files), path
+    try:
+        memo = spark._mcs_table_schema_memo
+    except AttributeError:
+        memo = {}
+        try:
+            spark._mcs_table_schema_memo = memo
+        except AttributeError:  # frozen session wrapper: no memo
+            memo = None
+    listing = _file_listing(path)
+    key = (listing, paths, base,
+           tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    hit = memo.get(path) if memo is not None else None
+    if hit is not None and hit[0] == key:
+        return reader.schema(hit[1]).parquet(*paths)
+    df = reader.parquet(*paths)
+    # a file that changed while Spark inferred would key the schema
+    # under a listing it was not read from: store only a stable read
+    if memo is not None and _file_listing(path) == listing:
+        memo[path] = (key, df.schema)
+    return df
+
+
+def read_table_evolved(spark: SparkSession, path: str) -> DataFrame:
+    """Read a table through its evolution sidecar: mergeSchema unions
+    old and new file schemas, added columns get their declared default
+    where files predate them, dropped columns are projected away.
+    Disabled partitions (caldisablepartitions analogue) are excluded at
+    the FILE level — their extents are never opened, exactly the
+    reference's extent-elimination of disabled partitions.
+
+    The raw read's inferred schema is memoized on the session, one
+    entry per table path. The key is ``(relpath, size, mtime_ns)`` of
+    every regular file under ``path`` (hidden files and the sidecar
+    included), the reader's explicit file list and ``basePath``, and
+    the parquet-inference confs (``_INFERENCE_CONFS``). A hit reads
+    with the stored schema and runs no Spark job; any difference in
+    the key is a miss, which runs the plain mergeSchema read and
+    stores its schema. The sidecar projections below apply on top
+    either way."""
+    import pyspark.sql.functions as F
+
+    evo = _evolution(path)
+    disabled = set(evo.get("disabled_partitions", []))
+    live = _live_data_files(path, disabled) if disabled else None
+    if live == []:
+        # every partition disabled: empty relation, full schema
+        df = _read_parquet_memo(spark, path).limit(0)
     else:
-        df = (
-            spark.read.option("mergeSchema", "true")
-            .option("recursiveFileLookup", "false")
-            .parquet(path)
-        )
+        df = _read_parquet_memo(spark, path, live)
     for c in evo["added"]:
         if c["name"] not in df.columns:
             df = df.withColumn(

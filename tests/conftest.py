@@ -20,8 +20,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # barrier devices) and must see a FRESH build every call — disable the
 # registry's session-scoped built-plan memo for the whole suite. The
 # memo itself has its own focused test (test_registry_plan_cache.py,
-# which re-enables it locally).
-os.environ.setdefault("MCS_PLAN_CACHE", "0")
+# which re-enables it locally). Set unconditionally: an MCS_PLAN_CACHE=1
+# inherited from the shell must not re-enable it.
+os.environ["MCS_PLAN_CACHE"] = "0"
 
 
 @pytest.fixture(scope="session")

@@ -250,6 +250,11 @@ def test_alias_shadowing_disables_fast_path(spark):
     shadowed = translate_statement(stmt, numeric_columns=frozenset({"x"}))
     plain = translate_statement(stmt)
     assert shadowed == plain, "shadowed name must not take the fast path"
+    # a backtick-quoted alias shadows the same way (it is masked text)
+    quoted = stmt.replace("AS x", "AS `X`")
+    assert translate_statement(
+        quoted, numeric_columns=frozenset({"x"})
+    ) == translate_statement(quoted), "quoted alias must shadow too"
     # an alias that does NOT shadow the operand leaves the fast path on
     stmt2 = "SELECT CAST(x AS SIGNED) AS v FROM t"
     assert translate_statement(
